@@ -11,9 +11,20 @@ Spark listener/executor metrics; this covers the local[N] harness.
 
 from __future__ import annotations
 
+import ctypes
 import os
+import platform
+import sys
 import threading
 import time
+
+# Linux kcmp(2) syscall numbers; KCMP_VM compares two processes' address
+# spaces
+_SYS_KCMP = (
+    {"x86_64": 312, "aarch64": 272}.get(platform.machine()) if sys.platform == "linux" else None
+)
+_KCMP_VM = 1
+_libc = ctypes.CDLL(None, use_errno=True) if _SYS_KCMP is not None else None
 
 
 def _cpu_times() -> tuple[float, float, float]:
@@ -36,12 +47,13 @@ def _rss_gb() -> float:
     the workload's memory lives in the JVM child and the pyspark.daemon
     Python workers, not the driver — /proc/self alone reported a few
     hundred MB while the executor heap held gigabytes."""
-    pids = {str(os.getpid())}
+    root = str(os.getpid())
+    pids = {root}
+    ppids: dict[str, str] = {}
     # one pass over /proc to collect the descendant set (parents appear
     # before children often but not always — iterate to a fixed point;
     # the tree is tiny, this is 2-3 passes at most)
     try:
-        ppids = {}
         for d in os.listdir("/proc"):
             if not d.isdigit():
                 continue
@@ -62,6 +74,14 @@ def _rss_gb() -> float:
         pass
     total_kb = 0.0
     for pid in pids:
+        # a child between clone(CLONE_VM) and exec — every process the JVM
+        # launches (Hadoop's local file system runs `chmod` for each file
+        # and directory it creates) — shares the JVM's address space and
+        # reports its whole VmRSS; counting it would add the JVM's RSS a
+        # second time in any sample that lands in that window. Sharing
+        # only ends (at exec), so asking before reading VmRSS is safe.
+        if pid != root and _shares_vm(pid, ppids.get(pid)):
+            continue
         try:
             with open(f"/proc/{pid}/status") as f:
                 for line in f:
@@ -71,6 +91,14 @@ def _rss_gb() -> float:
         except OSError:
             continue
     return total_kb / 1024 / 1024
+
+
+def _shares_vm(pid: str, other: str | None) -> bool:
+    """True when `pid` and `other` share one address space (kcmp KCMP_VM).
+    False when they do not, or when kcmp is unavailable."""
+    if _libc is None or other is None:
+        return False
+    return _libc.syscall(_SYS_KCMP, int(pid), int(other), _KCMP_VM, 0, 0) == 0
 
 
 class PerformanceMonitor:

@@ -2,7 +2,7 @@
 
 Mirrors the reference orchestrator's DAG
 (/root/reference/src/audiopro/analysis/controller.py:46-240): one scan
-fans out into three branches over the same cached input —
+fans out into three branches over the same input —
 
     sequences ──┬── framing → fused feature kernel   (extract_features)
                 ├── doc-level aggregates              (get_file_metadata)
@@ -12,13 +12,18 @@ fans out into three branches over the same cached input —
 controller.py:196-210), and the writer commits resumable checkpoints.
 
 Scale design:
-- `.persist()` on the accepted input replaces the reference's shared
-  in-memory array across its ThreadPool branches (controller.py:126-147).
+- The input is not cached: the profile and the kernel each make their own
+  pruned parquet scan (caching the raw token arrays cost 2x in profiling).
+  On the write path the one-row-per-doc profile is checkpointed instead.
 - The doc-level join is `F.broadcast` (1 row/doc vs ~n_tok/512 rows/doc).
-- Framing is narrow (no shuffle); the kernel is one Arrow-batched map; the
-  only shuffles in the whole plan are the doc-stats hash-agg and the final
-  range partition for ordered output (O1: sortWithinPartitions after
-  repartitionByRange — no global sort).
+- Framing is narrow (no shuffle); the kernel is one Arrow-batched map.
+- Order: without `out_dir`, frame_features come back range-partitioned and
+  sorted within partitions on (doc_id, frame_idx) (O1, no global sort).
+  With `out_dir` they go to the writer with no exchange: its
+  partitionBy("bucket") sorts by bucket alone and would discard that
+  order, and a range exchange samples its bounds by running the kernel
+  over every token a second time. Readers of the written output order it
+  themselves.
 """
 
 from __future__ import annotations
@@ -49,34 +54,19 @@ def analyze_sequences(
     error_budget_pct: float = DEFAULT_ERROR_BUDGET_PCT,
     repartition_output: bool = True,
     fused: bool = True,
-    cache_input: bool = False,
-    min_partitions: int | None = None,
     stop_event=None,
 ) -> dict[str, DataFrame]:
     """Build (and optionally write) the full analysis over a sequences table.
 
     Returns dict of DataFrames: frame_features, doc_metadata, quarantine.
     When `out_dir` is set, frame_features is committed via the resumable
-    CheckpointedWriter with the error-budget gate.
+    CheckpointedWriter with the error-budget gate, and `repartition_output`
+    has no effect (see the module docstring on order).
     """
     from ..sources.sequences import read_sequences, slice_time_range
 
     raw = read_sequences(spark, path)
     raw, start_sample = slice_time_range(raw, start_sec, end_sec)
-    # Scan parallelism comes from spark.sql.files.maxPartitionBytes (set it
-    # to ~input_bytes/2*cores for narrow inputs), NOT from a repartition():
-    # a round-robin shuffle of the full token payload measurably ANTI-scaled
-    # here (32 concurrent shuffle writers on one local disk), and at corpus
-    # scale the input has thousands of splits anyway. `min_partitions`
-    # remains for genuinely unsplittable sources.
-    if min_partitions and raw.rdd.getNumPartitions() < min_partitions:
-        raw = raw.repartition(min_partitions)
-    if cache_input:
-        # NOT the default: caching raw token arrays cost 2x in profiling
-        # (columnar cache decode beats a pruned parquet re-scan only when
-        # the source is remote/slow). Two pushdown scans is the scale-safe
-        # default.
-        raw = raw.persist()
 
     # one vectorized pass: doc stats + quarantine verdict (A12-A14 + S2/S3)
     profile = doc_profile_fused(raw, frame_length=frame_length)
@@ -134,8 +124,10 @@ def analyze_sequences(
         "left",
     )
 
-    if repartition_output:
-        # O1 ordered emission without a global sort
+    if repartition_output and not out_dir:
+        # O1 ordered emission without a global sort; never on the write
+        # path (module docstring: the writer drops it, its sampling job
+        # re-runs the kernel)
         enriched = enriched.repartitionByRange("doc_id", "frame_idx").sortWithinPartitions(
             "doc_id", "frame_idx"
         )

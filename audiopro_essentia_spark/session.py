@@ -31,8 +31,12 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or fetch) a SparkSession with the engine's config profile."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    """Build (or fetch) a SparkSession with the engine's config profile.
+
+    The default master is local[$SPARK_GRAFT_CPUS], else local[<cores this
+    process may run on>]; local[*] sizes its shuffle partitions the same way.
+    """
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     master = master or f"local[{cpus}]"
     # local mode: shuffle partitions ~ cores; a real cluster would use
     # ~2-3x total cores and let AQE coalesce.
@@ -41,7 +45,7 @@ def get_spark(
         # Spark's local-with-retries form is local[N,maxFailures] — only
         # the first field is the core count
         n = n.split(",")[0].strip()
-        shuffle_partitions = 32 if n == "*" else max(1, int(n))
+        shuffle_partitions = max(1, int(cpus if n == "*" else n))
 
     b = (
         SparkSession.builder.appName(app_name)

@@ -53,14 +53,8 @@ def main() -> None:
     from audiopro_essentia_spark.session import get_spark
     import __spark_entry__ as E
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     extra = {"spark.ui.enabled": "true"} if want_metrics else None
-    spark = get_spark(
-        app_name="bench_extra",
-        master=f"local[{cpus}]",
-        shuffle_partitions=cpus,
-        extra_conf=extra,
-    )
+    spark = get_spark(app_name="bench_extra", extra_conf=extra)
     spark.sparkContext.setLogLevel("ERROR")
 
     qs = E.queries()

@@ -78,6 +78,24 @@ def test_flagship_pipeline_single_shuffle_before_sink(spark, tiny_seqs):
     )
 
 
+def test_flagship_write_path_has_no_range_exchange(spark, tiny_seqs, tmp_path):
+    """The written frames reach the writer unexchanged: a range exchange
+    samples its bounds with a job that runs the kernel over every token a
+    second time, and the writer's Sort [bucket] drops its order anyway.
+    The returned-DataFrame path keeps its O1 range partitioning."""
+    from audiopro_essentia_spark.plans.pipeline import analyze_sequences
+
+    path = tiny_seqs.inputFiles()[0]
+
+    def plan(df) -> str:
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    written = analyze_sequences(spark, path, out_dir=str(tmp_path / "out"), n_buckets=2)
+    assert "rangepartitioning" not in plan(written["frame_features"])
+    returned = analyze_sequences(spark, path)
+    assert "rangepartitioning" in plan(returned["frame_features"])
+
+
 def test_lsh_candidate_stages_are_single_eval(spark):
     """Regression guard for the single-eval restructure: each LSH
     candidate generator must evaluate its signature UDF EXACTLY once in
